@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.aggregates import exact_sum
 from ..sources.readers import load_table
 
 N_SALTS = 16
@@ -647,9 +648,7 @@ def price_histogram_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy(bucket.alias("bucket"))
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            exact_sum("o_totalprice", 6).cast("double").alias("sum_price"),
             F.min("o_totalprice").alias("min_price"),
             F.max("o_totalprice").alias("max_price"),
         )

@@ -89,8 +89,9 @@ def _build_ifd(
             size = _TYPE_SIZE[typ] * count
             fmt = {_SHORT: "H", _LONG: "I"}[typ]
             packed = struct.pack(e + fmt, value)
+            if size > 4:
+                raise ValueError(f"tag {tag}: {size}-byte value cannot be inline")
             body += packed + b"\x00" * (4 - len(packed))
-            assert size <= 4
         else:
             if len(value) <= 4:
                 body += value.ljust(4, b"\x00")
@@ -141,7 +142,8 @@ def make_exif_app1(
     ifd0_probe, data0_probe = build(0)
     exif_off = 8 + len(ifd0_probe) + len(data0_probe)
     ifd0, data0 = build(exif_off)
-    assert len(ifd0) == len(ifd0_probe) and len(data0) == len(data0_probe)
+    if (len(ifd0), len(data0)) != (len(ifd0_probe), len(data0_probe)):
+        raise RuntimeError("IFD0 layout changed with its EXIF offset")
     exif_ifd, exif_data = _build_ifd(
         [
             (T_EXPOSURE, _RATIONAL, 1, rational(*exposure)),

@@ -74,7 +74,8 @@ class _BitW:
             self.put(0, 8 - self.n)
 
     def bytes(self) -> bytes:
-        assert self.n == 0
+        if self.n:
+            raise ValueError(f"{self.n} bits left unaligned")
         return bytes(self.buf)
 
 

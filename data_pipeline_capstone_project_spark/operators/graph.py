@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.aggregates import exact_sum
 from ..sources.readers import load_table
 
 N_ITER = 4
@@ -96,7 +97,7 @@ def pagerank(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
                 F.floor(F.col("rank_scaled") / F.col("out_deg")).alias("contrib"),
             )
             .groupBy("dst")
-            .agg(F.sum(F.col("contrib").cast("decimal(38,0)")).alias("in_sum"))
+            .agg(exact_sum("contrib", 0).alias("in_sum"))
         )
         ranks = nodes.join(
             F.broadcast(contribs), nodes.node == contribs.dst, "left"

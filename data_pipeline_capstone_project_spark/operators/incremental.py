@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.aggregates import exact_sum
 from ..sources.readers import load_table
 
 SPLIT_DAY = 15  # history = days 1..15, delta = days 16..
@@ -29,7 +30,7 @@ def partial_state(df: DataFrame) -> DataFrame:
     """Per-user mergeable state: (n, sum, max). All algebraic."""
     return df.groupBy("user_id").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_dec"),
+        exact_sum("value", 6).alias("sum_dec"),
         F.max("ts").alias("last_ts"),
     )
 

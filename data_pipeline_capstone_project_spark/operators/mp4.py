@@ -606,7 +606,8 @@ def _build_classic_mp4(
     probe = build(0)
     mdat_payload_off = probe.rfind(b"mdat") + 4
     out = build(mdat_payload_off)
-    assert len(out) == len(probe)
+    if len(out) != len(probe):
+        raise RuntimeError("mp4 layout changed with its mdat offset")
     return out
 
 
@@ -712,7 +713,8 @@ def _build_fmp4(
         moof = _box(
             b"moof", mfhd + _box(b"traf", tfhd + tfdt + build_trun(data_offset))
         )
-        assert len(moof) == len(probe)
+        if len(moof) != len(probe):
+            raise RuntimeError("moof layout changed with its data offset")
         out += moof + _box(b"mdat", b"".join(group))
     return bytes(out)
 

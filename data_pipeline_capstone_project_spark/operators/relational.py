@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.aggregates import exact_avg, exact_sum
 from ..functions.scalar import extract_extension, hex_color
 from ..sources.readers import load_table
 
@@ -96,25 +97,22 @@ PRICING_CUTOFF = "1998-09-02"
 
 def pricing_summary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped scan-heavy aggregate - the bench headline for
-    raw aggregation throughput. All money sums go through exact
-    decimal arithmetic (see :func:`..functions.aggregates.exact_avg`
-    rationale); per-row products stay double (deterministic), only the
-    reduction is decimal."""
+    raw aggregation throughput. All money sums are exact decimal sums
+    (:func:`..functions.aggregates.exact_sum`); per-row products stay
+    double (deterministic), only the reduction is decimal."""
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(38,6)")  # noqa: E731
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
     return (
         li.filter(F.col("l_shipdate") <= PRICING_CUTOFF)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(dec(F.col("l_quantity"))).cast("double").alias("sum_qty"),
-            F.sum(dec(F.col("l_extendedprice"))).cast("double").alias("sum_base_price"),
-            F.sum(dec(disc_price)).cast("double").alias("sum_disc_price"),
-            F.sum(dec(charge)).cast("double").alias("sum_charge"),
-            (F.sum(dec(F.col("l_quantity"))).cast("double") / F.count("l_quantity")).alias("avg_qty"),
-            (F.sum(dec(F.col("l_extendedprice"))).cast("double") / F.count("l_extendedprice")).alias("avg_price"),
-            (F.sum(dec(F.col("l_discount"))).cast("double") / F.count("l_discount")).alias("avg_disc"),
+            exact_sum("l_quantity", 6).cast("double").alias("sum_qty"),
+            exact_sum("l_extendedprice", 6).cast("double").alias("sum_base_price"),
+            exact_sum(disc_price, 6).cast("double").alias("sum_disc_price"),
+            exact_sum(f"{disc_price} * (1 + l_tax)", 6).cast("double").alias("sum_charge"),
+            exact_avg("l_quantity", 6).alias("avg_qty"),
+            exact_avg("l_extendedprice", 6).alias("avg_price"),
+            exact_avg("l_discount", 6).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -296,9 +294,7 @@ def null_semantics_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_rows"),
             F.count("t.price").alias("n_priced"),
-            F.sum(F.col("t.price").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            exact_sum("t.price", 6).cast("double").alias("sum_price"),
         )
     )
 

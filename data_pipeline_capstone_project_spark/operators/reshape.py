@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.aggregates import exact_avg, oracle_exact_avg
+from ..functions.aggregates import exact_avg, exact_sum, oracle_exact_avg
 from ..sources.readers import load_table
 
 MEASURES = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -46,8 +46,8 @@ def event_unpivot_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     long = li.unpivot(["l_returnflag"], list(MEASURES), "measure", "value")
     return long.groupBy("l_returnflag", "measure").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(38,4)")).cast("double").alias("sum_value"),
-        exact_avg(F.col("value")).alias("avg_value"),
+        exact_sum("value", 4).cast("double").alias("sum_value"),
+        exact_avg("value").alias("avg_value"),
     )
 
 
@@ -90,9 +90,7 @@ def gap_fill_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", F.col("o_orderdate").cast("date").alias("d")
     ).agg(
         F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(38,4)"))
-        .cast("double")
-        .alias("day_total"),
+        exact_sum("o_totalprice", 4).cast("double").alias("day_total"),
     )
     bounds = daily.groupBy("o_custkey").agg(
         F.min("d").alias("lo"), F.max("d").alias("hi")

@@ -358,7 +358,7 @@ def label_centroids_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     ex = emb.select("label", F.posexplode("embedding").alias("pos", "val"))
     return ex.groupBy("label", "pos").agg(
-        exact_avg(F.col("val").cast("double"), scale=7).alias("centroid"),
+        exact_avg("CAST(val AS DOUBLE)", scale=7).alias("centroid"),
         F.count("*").alias("n_vecs"),
     )
 

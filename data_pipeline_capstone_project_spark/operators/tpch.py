@@ -15,10 +15,10 @@ exercised. Scale design:
   for AQE to broadcast at runtime when statistics allow. The big
   fact-fact join (orders x lineitem) stays a shuffle join on the key
   both sides are already partitioned by after their scans.
-- **Exact decimal reduction.** Revenue sums go through
-  ``decimal(38,6)`` so the result is bit-identical to the DuckDB
-  oracle regardless of partition merge order (same rationale as
-  ``relational.pricing_summary_query``).
+- **Exact decimal reduction.** Revenue sums are the ``decimal(38,6)``
+  sum (:func:`..functions.aggregates.exact_sum`), so the result is
+  bit-identical to the DuckDB oracle regardless of partition merge
+  order (same rationale as ``relational.pricing_summary_query``).
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.aggregates import exact_sum
 from ..sources.readers import load_table
 
 Q3_SEGMENT = "BUILDING"
@@ -35,8 +36,8 @@ Q5_START = "1996-01-01"
 Q5_END = "1997-01-01"
 
 
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+#: per-line revenue, as SQL text for :func:`exact_sum`
+_REVENUE = "l_extendedprice * (1 - l_discount)"
 
 
 def shipping_priority_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,7 +62,7 @@ def shipping_priority_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(_revenue().cast("decimal(38,6)")).cast("double").alias("revenue"))
+        .agg(exact_sum(_REVENUE, 6).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
         .limit(10)
     )
@@ -114,7 +115,7 @@ def regional_volume_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(dim, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
-        .agg(F.sum(_revenue().cast("decimal(38,6)")).cast("double").alias("revenue"))
+        .agg(exact_sum(_REVENUE, 6).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), "n_name")
     )
 
@@ -154,7 +155,7 @@ def big_spenders_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     qualifying = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(38,6)")).alias("qty_dec"))
+        .agg(exact_sum("l_quantity", 6).alias("qty_dec"))
         .filter(F.col("qty_dec") > Q18_QTY_THRESHOLD)
         .select("l_orderkey", F.col("qty_dec").cast("double").alias("sum_qty"))
     )
@@ -217,7 +218,6 @@ def market_share_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
-    rev = _revenue().cast("decimal(38,6)")
     return (
         lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer, F.col("o_custkey") == F.col("c_custkey"))
@@ -226,8 +226,8 @@ def market_share_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(supp_nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
-            F.sum(F.when(F.col("n_name") == Q8_NATION, rev).otherwise(F.lit(0).cast("decimal(38,6)"))).alias("nat_dec"),
-            F.sum(rev).alias("tot_dec"),
+            exact_sum(f"CASE WHEN n_name = '{Q8_NATION}' THEN {_REVENUE} ELSE 0 END", 6).alias("nat_dec"),
+            exact_sum(_REVENUE, 6).alias("tot_dec"),
         )
         .select(
             "o_year",
@@ -275,13 +275,12 @@ def promo_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= Q14_START) & (F.col("l_shipdate") < Q14_END)
     )
-    rev = _revenue().cast("decimal(38,6)")
     return (
         lineitem.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
         .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(38,6)"))).alias("promo_dec"),
-            F.sum(rev).alias("tot_dec"),
+            exact_sum(f"CASE WHEN p_type = 'PROMO' THEN {_REVENUE} ELSE 0 END", 6).alias("promo_dec"),
+            exact_sum(_REVENUE, 6).alias("tot_dec"),
         )
         .select(
             "ship_month",
@@ -366,11 +365,7 @@ def revenue_filter_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(38,6)")
-            )
-            .cast("double")
-            .alias("revenue"),
+            exact_sum("l_extendedprice * l_discount", 6).cast("double").alias("revenue"),
             F.count("*").alias("n_rows"),
         )
     )
@@ -434,11 +429,7 @@ def discounted_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((F.col("p_type") == "LARGE") & (F.col("l_quantity") >= 20) & (F.col("l_quantity") <= 30) & (F.col("p_size") <= 15))
     )
     return joined.filter(band).agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,6)")
-        )
-        .cast("double")
-        .alias("revenue"),
+        exact_sum(_REVENUE, 6).cast("double").alias("revenue"),
         F.count("*").alias("n_rows"),
     )
 
@@ -527,10 +518,7 @@ def sales_opportunity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact decimal sum, ONE double division - no engine-specific
     # decimal-division scale rules in the compared value
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        (
-            F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("avg_bal")
+        (exact_sum("c_acctbal", 6).cast("double") / F.count(F.lit(1))).alias("avg_bal")
     )
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
@@ -539,9 +527,7 @@ def sales_opportunity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cntrycode")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("totacctbal"),
+            exact_sum("c_acctbal", 6).cast("double").alias("totacctbal"),
         )
     )
 
@@ -723,7 +709,7 @@ def volume_shipping_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
         )
-        .agg(F.sum(_revenue().cast("decimal(38,6)")).cast("double").alias("revenue"))
+        .agg(exact_sum(_REVENUE, 6).cast("double").alias("revenue"))
     )
 
 
@@ -775,7 +761,7 @@ def product_profit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
-        .agg(F.sum(_revenue().cast("decimal(38,6)")).cast("double").alias("sum_profit"))
+        .agg(exact_sum(_REVENUE, 6).cast("double").alias("sum_profit"))
     )
 
 
@@ -815,7 +801,7 @@ def returned_items_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_custkey")
-        .agg(F.sum(_revenue().cast("decimal(38,6)")).cast("double").alias("revenue"))
+        .agg(exact_sum(_REVENUE, 6).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), "o_custkey")
         .limit(20)
     )
@@ -868,7 +854,7 @@ def top_supplier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= Q15_START) & (F.col("l_shipdate") < Q15_END)
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(_revenue().cast("decimal(38,6)")).alias("rev_exact")
+        exact_sum(_REVENUE, 6).alias("rev_exact")
     )
     max_rev = revenue.agg(F.max("rev_exact").alias("max_rev"))
     supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -930,10 +916,7 @@ def small_quantity_revenue_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(per_part, F.col("l_partkey") == F.col("avg_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_cut"))
         .agg(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double")
-                / 7.0
-            ).alias("avg_yearly")
+            (exact_sum("l_extendedprice", 6).cast("double") / 7.0).alias("avg_yearly")
         )
     )
 

@@ -45,11 +45,11 @@ def rolling_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("user_id").alias("id"))
         .agg(
             F.count("*").alias("doc_count"),
-            exact_avg(F.col("value")).alias("eng_avg"),
-            exact_avg(F.col("followers"), scale=0).alias("fol_avg"),
-            exact_avg(
-                F.when(F.col("followers") != -1, F.col("followers")), scale=0
-            ).alias("fol_avg_clean"),
+            exact_avg("value").alias("eng_avg"),
+            exact_avg("followers", scale=0).alias("fol_avg"),
+            exact_avg("CASE WHEN followers <> -1 THEN followers END", scale=0).alias(
+                "fol_avg_clean"
+            ),
         )
     )
 

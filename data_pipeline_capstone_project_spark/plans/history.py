@@ -60,8 +60,8 @@ def history_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("id"))
         .agg(
             F.count("*").alias("doc_count"),
-            exact_avg(F.col("l_quantity")).alias("fol_avg"),
-            exact_avg(F.col("l_extendedprice")).alias("eng_avg"),
+            exact_avg("l_quantity").alias("fol_avg"),
+            exact_avg("l_extendedprice").alias("eng_avg"),
         )
     )
 

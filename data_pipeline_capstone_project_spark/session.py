@@ -28,6 +28,8 @@ _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 #: serializes the package-zip rebuild (see ship_package)
 _SHIP_LOCK = threading.Lock()
+#: applicationIds whose SparkContext already has the zip
+_SHIPPED: set[str] = set()
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -38,7 +40,9 @@ def ship_package(spark: SparkSession) -> None:
     re-import the module. On a real cluster that is exactly what you
     want (ship one zip instead of pickling code per task), and it is
     done the standard way: zip the package and ``addPyFile`` it.
-    Idempotent; rebuilds only when sources are newer than the zip.
+    Idempotent; rebuilds only when sources are newer than the zip, and
+    adds the zip once per application (Spark ignores a repeated
+    ``addPyFile`` of the same path, rebuilt or not, and logs a WARN).
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join("/tmp", "data_pipeline_capstone_project_spark.zip")
@@ -64,7 +68,10 @@ def ship_package(spark: SparkSession) -> None:
                             rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                             zf.write(full, rel)
             os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+        app_id = spark.sparkContext.applicationId
+        if app_id not in _SHIPPED:
+            spark.sparkContext.addPyFile(zip_path)
+            _SHIPPED.add(app_id)
 
 
 # Scan-partition sizing for binary-heavy tables (image/audio/video

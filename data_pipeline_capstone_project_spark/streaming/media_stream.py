@@ -106,7 +106,7 @@ def streaming_media_ingest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         # audit). r15 (ADVICE r14): the trigger size is DERIVED from
         # the staged wave-1 listing instead of a fixture-count literal,
         # so a fixture change cannot silently misalign batches; the
-        # assert pins the invariant the alignment needs (no later wave
+        # check pins the invariant the alignment needs (no later wave
         # larger than wave 1 - decode is batching-invariant so output
         # would stay correct, but the two-epoch property the entry
         # proves would weaken).
@@ -115,7 +115,8 @@ def streaming_media_ingest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             for d in os.scandir(src) if d.is_dir()
         }
         wave1_files = wave_sizes["wave1"]
-        assert wave1_files == max(wave_sizes.values()), wave_sizes
+        if wave1_files != max(wave_sizes.values()):
+            raise RuntimeError(f"wave1 must be the largest staged wave: {wave_sizes}")
         stream = (
             spark.readStream.format("binaryFile")
             .schema(

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.aggregates import exact_sum
+
 _SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -51,7 +53,7 @@ def fanout_batch(batch: DataFrame, epoch_id: int, detail_dir: str, agg_dir: str)
     pinned = batch.localCheckpoint(eager=True)
     agg = pinned.groupBy("event_type").agg(
         F.count("*").alias("pn"),
-        F.sum(F.col("value").cast("decimal(38,6)")).alias("psum"),
+        exact_sum("value", 6).alias("psum"),
     )
     with ThreadPoolExecutor(max_workers=2) as pool:
         futures = [
@@ -133,9 +135,7 @@ def streaming_multi_sink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg_back = spark.read.parquet(agg)
         d = detail_back.groupBy("event_type").agg(
             F.count("*").alias("n_detail"),
-            F.sum(F.col("value").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("sum_detail"),
+            exact_sum("value", 6).cast("double").alias("sum_detail"),
         )
         a = agg_back.groupBy("event_type").agg(
             F.sum("pn").alias("n_agg"),

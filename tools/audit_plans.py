@@ -23,10 +23,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_capstone_project_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402

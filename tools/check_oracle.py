@@ -17,7 +17,7 @@ from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_capstone_project_spark.session import get_spark  # noqa: E402
 from data_pipeline_capstone_project_spark.schemas import TESTDATA_TABLES  # noqa: E402
