@@ -724,9 +724,11 @@ def _wav_oracle() -> str:
         payload = _make_fixture(ns, rate, ch, spec, seed)
         pch, prate, pbits, pdur = wav_meta(payload)
         codec = _TAG_NAMES[wav_fmt_tag(payload)]
-        assert (pch, prate) == (ch, rate)
+        if (pch, prate) != (ch, rate):
+            raise RuntimeError(f"{name}: parsed {pch} ch @ {prate} Hz")
         pcm = wav_pcm(payload)
-        assert pcm.shape == (ns, ch)
+        if pcm.shape != (ns, ch):
+            raise RuntimeError(f"{name}: decoded PCM shape {pcm.shape}")
         scale = 1 << 23 if codec == "float" else 1
         vals = pcm.astype(np.float64) * scale
         rows.append(

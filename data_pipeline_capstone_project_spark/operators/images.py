@@ -640,10 +640,11 @@ def _expected_palette_json(user: int) -> str:
     # fixture palette at oracle-build time so a future fixture edit
     # cannot introduce a nondeterministic compare.
     sums = [s for s, _ in scored]
-    assert len(set(sums)) == len(sums), (
-        f"user {user}: fixture colors share an HSV component sum {sums} - "
-        "operator and oracle tie-breaks would diverge"
-    )
+    if len(set(sums)) != len(sums):
+        raise RuntimeError(
+            f"user {user}: fixture colors share an HSV component sum {sums} - "
+            "operator and oracle tie-breaks would diverge"
+        )
     scored.sort()  # equal counts -> ascending HSV center sum
     colors = []
     for _, (r, g, b) in scored:

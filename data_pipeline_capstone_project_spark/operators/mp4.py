@@ -451,19 +451,21 @@ def _mp4_oracle() -> str:
     """Closed-form expected rows; n_bytes recomputed by building the
     same fixture bytes at oracle-build time (no Spark), so a container
     layout drift in make_mp4 breaks the hash, and the rescale
-    round-trip (ms -> timescale units -> ms) is asserted exact for
+    round-trip (ms -> timescale units -> ms) is checked exact for
     the chosen fixtures."""
     rows = []
     for name, w, h, dur, ts, nmdat in _video_fixtures():
         payload = make_mp4(w, h, dur, timescale=ts, mdat_bytes=bytes(nmdat))
         pw, ph, pdur = mp4_meta(payload)
-        assert (pw, ph, pdur) == (w, h, dur), (name, pw, ph, pdur)
+        if (pw, ph, pdur) != (w, h, dur):
+            raise RuntimeError(f"{name}: parsed {(pw, ph, pdur)}")
         rows.append(f"('{name}', {w}, {h}, {dur}, {len(payload)})")
     for j, (name, payload) in enumerate(_fmp4_meta_fixtures()):
         ts = (1000, 90000, 600)[j % 3]
         exp_dur = (2 + j % 3) * (ts // VIDEO_FPS) * 1000 // ts
         pw, ph, pdur = mp4_meta(payload)
-        assert (pw, ph, pdur) == (16, 16, exp_dur), (name, pw, ph, pdur)
+        if (pw, ph, pdur) != (16, 16, exp_dur):
+            raise RuntimeError(f"{name}: parsed {(pw, ph, pdur)}")
         rows.append(f"('{name}', 16, 16, {exp_dur}, {len(payload)})")
     return (
         "SELECT video_name, width, height, duration_ms, n_bytes "
@@ -1173,10 +1175,12 @@ def _mp4_audio_oracle() -> str:
             rate, ch, dur, with_video=(640, 360) if av else None
         )
         codec, prate, pch, pbits, pdur = mp4_audio_meta(payload)
-        assert (codec, prate, pch, pbits) == ("mp4a", rate, ch, 16)
+        if (codec, prate, pch, pbits) != ("mp4a", rate, ch, 16):
+            raise RuntimeError(f"{name}: parsed {(codec, prate, pch, pbits)}")
         # ms -> timescale-units -> ms round trip is exact only when the
-        # rate divides cleanly; assert against the recomputed value
-        assert pdur == round((dur * rate // 1000) * 1000 / rate)
+        # rate divides cleanly; check against the recomputed value
+        if pdur != round((dur * rate // 1000) * 1000 / rate):
+            raise RuntimeError(f"{name}: parsed duration {pdur} ms")
         rows.append(
             f"('{name}', 'mp4a', {rate}, {ch}, 16, {pdur}, {len(payload)})"
         )

@@ -434,7 +434,8 @@ HH_FRACTION = 0.005       # report terms with freq > 0.5% of all tokens
 # Guarantee needs HH_FRACTION > 1/MG_COUNTERS: a term missing from
 # EVERY partition sketch has global count <= sum_p n_p/(k+1) < n/k
 # = n/256 < 0.005 n, so no true heavy hitter can be missed.
-assert HH_FRACTION > 1.0 / MG_COUNTERS
+if HH_FRACTION <= 1.0 / MG_COUNTERS:
+    raise ValueError("HH_FRACTION must exceed 1 / MG_COUNTERS")
 
 
 def _mg_partition(batches):

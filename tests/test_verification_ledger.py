@@ -13,13 +13,17 @@ import json
 import os
 import re
 
-from data_pipeline_capstone_project_spark.registry import ORACLES, QUERIES
+from data_pipeline_capstone_project_spark.registry import (
+    ENTRIES,
+    ORACLES,
+    QUERIES,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Entries intentionally shipped without a SQL oracle (non-SQL-expressible
 # by design; each must have a props/exact twin gating its invariants).
-ROWS_ONLY = {"color_palette"}
+ROWS_ONLY: set[str] = set()
 
 
 def _ledger_rows() -> dict[str, dict[str, str]]:
@@ -43,6 +47,9 @@ def _ledger_rows() -> dict[str, dict[str, str]]:
 
 
 def test_every_query_has_an_oracle_or_is_allowlisted_rows_only():
+    names = [e.name for e in ENTRIES]
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    assert not dupes, f"registry names on more than one row: {dupes}"
     missing = [n for n in QUERIES if n not in ORACLES and n not in ROWS_ONLY]
     assert not missing, (
         f"registry entries without an oracle_sql() entry (add the SQL twin "
@@ -51,6 +58,20 @@ def test_every_query_has_an_oracle_or_is_allowlisted_rows_only():
     )
     stale = [n for n in ORACLES if n not in QUERIES]
     assert not stale, f"oracles for entries not in the registry: {stale}"
+
+
+def test_readme_catalogue_names_every_entry():
+    """README's "Query catalogue" section is the one description of
+    what each entry computes; every registry name must appear in it
+    as a `code` span."""
+    with open(os.path.join(REPO, "README.md")) as fh:
+        readme = fh.read()
+    section = readme.split("## Query catalogue", 1)[1].split("\n## ", 1)[0]
+    named = set(re.findall(r"`([a-z0-9_]+)`", section))
+    missing = [n for n in QUERIES if n not in named]
+    assert not missing, (
+        f"registry entries missing from README's query catalogue: {missing}"
+    )
 
 
 def test_ledger_covers_the_registry_exactly():

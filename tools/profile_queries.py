@@ -1,10 +1,12 @@
-"""Round-14 optimization profiler: per-query timing + sub-phase
-breakdown on demand.
+"""Per-query profiler: noop-sink timings, or formatted plans.
 
 Usage:
-    python tools/profile_r14.py time q1 q2 ...      # 3x noop-timed runs
-    python tools/profile_r14.py explain q1 q2 ...   # formatted plans ->
-                                                    # plans/r14/<q>_<tag>.txt
+    python tools/profile_queries.py time [q ...]
+        3x noop-timed runs per query
+    python tools/profile_queries.py explain OUT_DIR [q ...]
+        formatted plans -> OUT_DIR/<q>_<tag>.txt
+With no query names, every registry entry is profiled.
+
 Env:
     SPARK_GRAFT_PROFILE_RUNS   (default 3)
     SPARK_GRAFT_PROFILE_TAG    (default "before") explain file suffix
@@ -29,20 +31,19 @@ import __spark_entry__ as entrymod  # noqa: E402
 
 
 def main() -> None:
-    mode = sys.argv[1]
-    names = sys.argv[2:]
+    args = sys.argv[1:]
+    mode = args.pop(0) if args else ""
+    if mode not in ("time", "explain") or (mode == "explain" and not args):
+        print(__doc__, file=sys.stderr)
+        raise SystemExit(2)
+    out_dir = args.pop(0) if mode == "explain" else ""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("profile-r14")
+    spark = get_spark("profile")
     queries = entrymod.queries()
-    if not names:
-        names = list(queries)
+    names = args or list(queries)
 
     if mode == "explain":
         tag = os.environ.get("SPARK_GRAFT_PROFILE_TAG", "before")
-        out_dir = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "plans", "r14",
-        )
         os.makedirs(out_dir, exist_ok=True)
         for name in names:
             df = queries[name](spark, sf_dir)
@@ -56,7 +57,6 @@ def main() -> None:
             print(f"{name}: {path} ({plan.count('Exchange')} Exchange)")
         return
 
-    assert mode == "time", mode
     runs = int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "3"))
     warm_dir = "/root/testdata/sf0.001"
     results: dict[str, list[float]] = {}
@@ -80,7 +80,7 @@ def main() -> None:
         scrub()
     for r in range(runs):
         for name in names:
-            spark.sparkContext.setJobDescription(f"r14-prof {name} run{r}")
+            spark.sparkContext.setJobDescription(f"profile {name} run{r}")
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"

@@ -4,7 +4,8 @@ oracle sweeps (sf0.01 / sf0.1), and whether it sits inside the
 driver's 50-entry gate window this round.
 
 Usage: python tools/verification_ledger.py [sf001_log] [sf01_log] [mx_log]
-(logs are `tools/check_oracle.py` outputs; pass "-" to skip one;
+(logs are `tools/check_oracle.py` outputs; pass "-" for a sweep not
+re-run, and its column keeps the values VERIFICATION.md records;
 mx_log is a sweep run under a multi-process master, e.g.
 SPARK_GRAFT_MASTER=local-cluster[2,16,8192]).
 """
@@ -41,9 +42,25 @@ def _driver_rounds() -> dict[str, list[str]]:
     return out
 
 
+def _recorded_column(column: str) -> dict[str, str]:
+    """One column of the VERIFICATION.md table as it stands."""
+    out: dict[str, str] = {}
+    path = os.path.join(REPO, "VERIFICATION.md")
+    if not os.path.isfile(path):
+        return out
+    header: list[str] = []
+    for line in open(path):
+        cells = [c.strip() for c in line.strip().strip("|").split("|")]
+        if cells[:2] == ["#", "entry"]:
+            header = cells
+        elif header and len(cells) == len(header) and cells[0].isdigit():
+            out[cells[1]] = cells[header.index(column)]
+    return out
+
+
 def _local_log(path: str) -> dict[str, str]:
     out: dict[str, str] = {}
-    if path == "-" or not os.path.isfile(path):
+    if not os.path.isfile(path):
         return out
     for line in open(path, errors="replace"):
         line = line.replace("\r", "\n").split("\n")[-1] if "\r" in line else line
@@ -56,9 +73,12 @@ def _local_log(path: str) -> dict[str, str]:
 def main() -> None:
     from data_pipeline_capstone_project_spark.registry import ORACLES, QUERIES
 
-    sf001 = _local_log(sys.argv[1] if len(sys.argv) > 1 else "-")
-    sf01 = _local_log(sys.argv[2] if len(sys.argv) > 2 else "-")
-    mx = _local_log(sys.argv[3] if len(sys.argv) > 3 else "-")
+    logs = dict(zip(("sf0.01", "sf0.1", "mx"), sys.argv[1:4]))
+    kept = [c for c in ("sf0.01", "sf0.1", "mx") if logs.get(c, "-") == "-"]
+    sf001, sf01, mx = (
+        _recorded_column(c) if c in kept else _local_log(logs[c])
+        for c in ("sf0.01", "sf0.1", "mx")
+    )
     driver = _driver_rounds()
 
     names = list(QUERIES)
@@ -75,6 +95,8 @@ def main() -> None:
         "(local-cluster[2,16,8192]: two executor JVMs, cross-process",
         "broadcast serialization, network shuffle, Python worker",
         "shipping - the single-JVM blind spot VERDICT r8 item 1 named).",
+        "Columns kept from the previous ledger (sweep not re-run at this",
+        f"regeneration): {', '.join(kept) if kept else 'none'}.",
         "",
         "| # | entry | oracle | window | driver | sf0.01 | sf0.1 | mx |",
         "|---|---|---|---|---|---|---|---|",
@@ -101,11 +123,11 @@ def main() -> None:
         "the gate window next round.",
         "",
         "## Multi-executor evidence (first run round 9, VERDICT r8",
-        "item 1; the `mx` column above is from THIS regeneration's",
-        "fresh local-cluster sweep)",
+        "item 1; the `mx` column above is from the newest",
+        "local-cluster sweep on record)",
         "",
         "Every prior correctness/bench signal was single-JVM `local[32]`.",
-        "Round 9 (and each ledger regeneration since) re-ran the FULL",
+        "Round 9 and later rounds re-ran the FULL",
         "registry oracle sweep (sf0.01) and the",
         "complete streaming pytest suite under",
         "`SPARK_GRAFT_MASTER=local-cluster[2,16,8192]` - two separate",
